@@ -109,6 +109,32 @@ object Bench {
       .groupMapReduce(_._1)(_._2)(math.min)
   }
 
+  /** Seconds as the contract line prints them: 3 decimals, '.' always. */
+  private def sec(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+
+  private def esc(s: String): String =
+    s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"
+                case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString }
+
+  /** The lean contract line: the LAST stdout line, read from a
+    * 2000-char output tail that also holds sbt's `[info] ` prefix and its
+    * closing `[success] Total time ...` line. Seconds carry 3 decimals,
+    * `sf` is the data directory's basename, and the contention verdict
+    * is a flag plus the number of suspect queries (their names are in
+    * the full line). `queries` stays last, inside any surviving suffix.
+    */
+  def contractLine(results: Seq[(String, Double)], errors: collection.Map[String, String],
+                   contended: Boolean, suspects: Int, sfDir: String): String = {
+    val total = results.map(_._2).filter(_ >= 0).sum
+    val errJson = errors.map { case (k, v) => s""""$k":"${esc(v)}"""" }
+      .mkString("{", ",", "}")
+    val qs = results.map { case (k, v) => s""""$k":${sec(v)}""" }
+      .mkString("{", ",", "}")
+    val sf = new java.io.File(sfDir).getName
+    s"""{"metric":"total","value":${sec(total)},"errors":$errJson,""" +
+      s""""contended":$contended,"suspect":$suspects,"sf":"${esc(sf)}","queries":$qs}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -275,9 +301,6 @@ object Bench {
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
-    def esc(s: String) =
-      s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"
-                  case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString }
     val errJson = errors.map { case (k, v) => s""""$k":"${esc(v)}"""" }
       .mkString("{", ",", "}")
     val loadJson = queryLoad.map { case (k, v) => s""""$k":$v""" }
@@ -315,11 +338,11 @@ object Bench {
     // PERF_r16/r17 per-query comparisons came back empty):
     //  - the FULL line (all contention/steal telemetry) goes to stderr
     //    and BENCH_LOCAL.jsonl, where bestKnown and humans read it;
-    //  - the LEAN driver-contract line {metric,value,unit,errors,sf,
-    //    queries} is the LAST stdout line, small enough (~2.3 KB) to
-    //    survive the tail window whole. `queries` still rides at the
-    //    END of both lines (round-9 lesson: trailing placement keeps
-    //    the per-query record inside any suffix that survives).
+    //  - the LEAN contract line ([[contractLine]]) is the LAST
+    //    stdout line, small enough to survive the tail window whole.
+    //    `queries` still rides at the END of both lines (round-9
+    //    lesson: trailing placement keeps the per-query record inside
+    //    any suffix that survives).
     val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","errors":$errJson,"contended":$everContended,"suspect":$suspectJson,"loadavg_start":"$loadStart","loadavg_end":"${BenchEnv.loadavg()}","query_load":$loadJson,"query_load_end":$loadEndJson,"query_steal":$stealJson,"reruns":$rerunJson,"passes":"min_of_2","sf":"$sfDir","queries":$qs}"""
     System.err.println(fullLine)
     // local floor history (BENCH_LOCAL.jsonl, appended per run): the
@@ -331,7 +354,7 @@ object Bench {
     } catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] could not append BENCH_LOCAL.jsonl: $e")
     }
-    println(s"""{"metric":"total","value":$total,"unit":"sec","errors":$errJson,"sf":"$sfDir","queries":$qs}""")
+    println(contractLine(results, errors, everContended, suspect.size, sfDir))
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)
   }

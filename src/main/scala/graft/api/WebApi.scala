@@ -35,9 +35,46 @@ import graft.store.ServiceStore
   * Results are encoded with Spark's row-to-JSON (dates → ISO strings,
   * O20). Query knobs mirror web_ballcone.py:117-120 (`distinct`'s value
   * doubles as the count field there; here `field` is explicit).
+  *
+  * Session choice: a report request (`/`, `/services/{s}`,
+  * `/api/dashboard`, `/api/{s}/...`) whose input fits in one
+  * `spark.sql.adaptive.advisoryPartitionSizeInBytes` of the caller's
+  * session is planned in [[smallSession]]: one shuffle partition, no
+  * AQE, so a small report is one job instead of one per stage plus
+  * AQE's re-planning. The input is the service's directory, or the
+  * whole warehouse for the dashboard. A report's shuffles carry less
+  * than its input, so AQE would coalesce each into one partition
+  * anyway. The rule is keyed to input bytes: a larger input keeps the
+  * caller's session and plans exactly as before, at any store size.
+  * `/sql` always runs in the caller's session: arbitrary SQL has no
+  * size bound.
   */
 final class WebApi(spark: SparkSession, store: ServiceStore,
                    topLimit: Int = 5, maxRows: Int = 10000, days: Int = 30) {
+
+  /** The caller's SQL confs and optimizer rules (the UTC zone and
+    * SargableDates change results and pruning), then one shuffle
+    * partition and no AQE. Per-session confs: the caller's session,
+    * its stream and `/sql` keep their own. The scan split stays the
+    * caller's, so partial sums add up in the same order and bodies
+    * stay bit-identical.
+    */
+  private[graft] val smallSession: SparkSession = {
+    val small = spark.newSession()
+    spark.conf.getAll.foreach { case (k, v) =>
+      if (spark.conf.isModifiable(k)) small.conf.set(k, v)
+    }
+    small.experimental.extraOptimizations = spark.experimental.extraOptimizations
+    small.conf.set("spark.sql.adaptive.enabled", "false")
+    small.conf.set("spark.sql.shuffle.partitions", "1")
+    small
+  }
+
+  private def sessionFor(inputBytes: Long): SparkSession = {
+    val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+    if (inputBytes <= advisory) smallSession else spark
+  }
 
   private val console = new Console(spark, store)
   private var server: HttpServer = _
@@ -77,11 +114,11 @@ final class WebApi(spark: SparkSession, store: ServiceStore,
     * service (Reports.dashboard scaladoc; O18); services with no
     * events that day still render with 0, like the reference.
     */
-  private def dashboardCounts(day: String): Seq[(String, Long)] = {
-    val services = store.list()
+  private def dashboardCounts(services: Seq[String],
+                              day: String): Seq[(String, Long)] = {
     if (services.isEmpty) return Seq.empty
-    val agg = Reports.dashboard(store.readAll(), "datetime", "service",
-        "ip", day)
+    val all = store.readAll(sessionFor(store.sizeBytes()))
+    val agg = Reports.dashboard(all, "datetime", "service", "ip", day)
       .collect()
       .map(r => r.getAs[String]("service") -> r.getAs[Long]("cnt"))
       .toMap
@@ -91,7 +128,7 @@ final class WebApi(spark: SparkSession, store: ServiceStore,
 
   private def dashboard(ex: HttpExchange): (Int, String) = {
     val day = param(ex, "date").getOrElse(Dates.todayUtc().toString)
-    (200, dashboardCounts(day).map { case (s, c) =>
+    (200, dashboardCounts(store.list(), day).map { case (s, c) =>
       s"""{"service":${jsonString(s)},"unique":$c}"""
     }.mkString("[", ",", "]"))
   }
@@ -100,7 +137,9 @@ final class WebApi(spark: SparkSession, store: ServiceStore,
   private def rootPage(ex: HttpExchange): (Int, String) = {
     if (ex.getRequestURI.getPath != "/") return (404, notFound)
     val day = param(ex, "date").getOrElse(Dates.todayUtc().toString)
-    (200, Html.root(store.list(), dashboardCounts(day), console.cachedSizeBytes()))
+    val services = store.list()
+    (200, Html.root(services, dashboardCounts(services, day),
+      console.cachedSizeBytes()))
   }
 
   /** GET /services/{s} — the HTML report page (templates/service.html):
@@ -116,7 +155,7 @@ final class WebApi(spark: SparkSession, store: ServiceStore,
     val service = rest.takeWhile(_ != '/')
     if (!store.exists(service))
       return (404, s"""{"error":${jsonString(s"unknown service $service")}}""")
-    val df = store.read(service)
+    val df = readService(service)
     val (startD, stopD) = Dates.window(Dates.todayUtc(), days)
     val (start, stop) = (Some(startD.toString), Some(stopD.toString))
     def str(v: Any): String = String.valueOf(v)
@@ -156,6 +195,9 @@ final class WebApi(spark: SparkSession, store: ServiceStore,
         else acc :+ (d -> Vector(g -> c))
     }.reverse
 
+  private def readService(service: String): DataFrame =
+    store.read(service, sessionFor(store.sizeBytes(service)))
+
   private val notFound = """{"error":"not found"}"""
 
   private def listServices(): (Int, String) =
@@ -167,7 +209,7 @@ final class WebApi(spark: SparkSession, store: ServiceStore,
     val service = parts(0)
     if (!store.exists(service))
       return (404, s"""{"error":${jsonString(s"unknown service $service")}}""")
-    val df = store.read(service)
+    val df = readService(service)
     val start = param(ex, "start")
     val stop = param(ex, "stop")
     val result: Either[String, DataFrame] = parts(1) match {

@@ -179,11 +179,6 @@ object Reports {
       .join(unique.withColumnRenamed("cnt", "uniq"), Seq("d"), "full_outer")
       .orderBy("d")
 
-  /** O18 — dashboard: one day's COUNT(DISTINCT field) per service, sorted
-    * by (-count, service) (ballcone/web_ballcone.py:27-36). The reference
-    * loops one query per service table; with a service column this is a
-    * single grouped aggregate — one shuffle instead of N queries.
-    */
   /** Traffic-anomaly days: each day's visit count against its trailing
     * `trail`-day mean, flagged when the ratio leaves [1/factor, factor]
     * — the spike/drop alarm a monitoring dashboard derives from the
@@ -270,6 +265,11 @@ object Reports {
           .as("ewma"))
   }
 
+  /** O18 — dashboard: one day's COUNT(DISTINCT field) per service, sorted
+    * by (-count, service) (ballcone/web_ballcone.py:27-36). The reference
+    * loops one query per service table; with a service column this is a
+    * single grouped aggregate — one shuffle instead of N queries.
+    */
   def dashboard(df: DataFrame, tsCol: String, serviceCol: String,
                 field: String, dayStr: String): DataFrame =
     df.filter(DateRange.pred(col(tsCol), Some(dayStr), Some(dayStr)))

@@ -37,12 +37,17 @@ final class Console(spark: SparkSession, store: ServiceStore) {
   }
 
   /** (Re)build the catalog shim views from current store state. */
-  def refreshShims(): Unit = {
+  def refreshShims(): Unit = refreshShims(store.list())
+
+  /** Rebuild the shims from a listing of `services`; one dropped since
+    * that listing gets an empty view.
+    */
+  private[graft] def refreshShims(services: Seq[String]): Unit = {
     import spark.implicits._
     Seq(store.sizeBytes()).toDF("database_size")
       .createOrReplaceTempView("graft_database_size")
-    store.list().toDF("name").createOrReplaceTempView("graft_tables")
-    store.list().foreach { s =>
+    services.toDF("name").createOrReplaceTempView("graft_tables")
+    services.foreach { s =>
       if (store.checkService(s))
         store.read(s).createOrReplaceTempView(s)
     }

@@ -1,8 +1,9 @@
 package graft.store
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** Per-service storage O4-O7 + O14.
   *
@@ -14,6 +15,11 @@ import org.apache.spark.sql.functions._
   * and partition pruning turns every per-service query into a scan of
   * just that service's files. The per-table API surface of the
   * reference (create/drop/list/exists/size) maps to partition ops.
+  *
+  * The store holds one row schema (the `Ingest.pipeline` entry). It is
+  * inferred from one footer on the first read that finds data and
+  * reused by every later read, so a report request plans without a
+  * schema job and lists only its own service's directory.
   */
 final class ServiceStore(spark: SparkSession, warehouse: String) {
 
@@ -26,6 +32,20 @@ final class ServiceStore(spark: SparkSession, warehouse: String) {
     new Path(warehouse, s"service=$service")
 
   def checkService(service: String): Boolean = service.matches(ServicePattern)
+
+  @volatile private var schema: Option[StructType] = None
+
+  /** The store's schema, `service` included. `service` is pinned to a
+    * string: partition inference would type an all-digit set of
+    * service names as int, and a later `service=blog` would not cast.
+    */
+  private def storeSchema(): StructType = schema.getOrElse {
+    val inferred = StructType(spark.read.parquet(warehouse).schema.map { f =>
+      if (f.name == "service") f.copy(dataType = StringType) else f
+    })
+    schema = Some(inferred)
+    inferred
+  }
 
   /** O5: append a batch of entries. `df` must carry a `service` column
     * plus the Entry columns; the write is partitioned so each service
@@ -57,13 +77,24 @@ final class ServiceStore(spark: SparkSession, warehouse: String) {
   def drop(service: String): Unit =
     if (exists(service)) { fs.delete(servicePath(service), true); () }
 
-  /** O8 input: one service's entries (partition-pruned scan). */
-  def read(service: String): DataFrame =
-    spark.read.parquet(warehouse).filter(col("service") === service)
-      .drop("service")
+  /** O8 input: one service's entries, planned in `session`. Only
+    * `service=<s>/` is listed and scanned. A service that vanished
+    * after the caller looked (a `drop`, or a compaction swap window)
+    * reads as empty, as a filter over the whole warehouse would.
+    */
+  def read(service: String, session: SparkSession = spark): DataFrame = {
+    val s = storeSchema()
+    try session.read.schema(s).option("basePath", warehouse)
+      .parquet(servicePath(service).toString).drop("service")
+    catch { case e: AnalysisException if e.getCondition == "PATH_NOT_FOUND" =>
+      session.createDataFrame(java.util.List.of[Row](),
+        StructType(s.filterNot(_.name == "service")))
+    }
+  }
 
   /** All services (for dashboard fan-out as one grouped aggregate). */
-  def readAll(): DataFrame = spark.read.parquet(warehouse)
+  def readAll(session: SparkSession = spark): DataFrame =
+    session.read.schema(storeSchema()).parquet(warehouse)
 
   /** O22 — bulk migration (tools/monet2duck.py): ingest an external
     * table wholesale and verify row counts. The reference pages with
@@ -71,8 +102,8 @@ final class ServiceStore(spark: SparkSession, warehouse: String) {
     * and parallelizes the scan, so migration is one distributed
     * write with a count check, not a driver-side loop.
     * Returns (rows in source, rows landed for those services).
-    */
-  /** `verifyDestination = false` (default): the landed count is
+    *
+    * `verifyDestination = false` (default): the landed count is
     * OBSERVED on the write pass itself (metrics piggyback on the job;
     * no destination scans) — note both numbers then derive from reads
     * of the SOURCE, so a source mutating mid-migration shows up as a
@@ -294,9 +325,12 @@ final class ServiceStore(spark: SparkSession, warehouse: String) {
       .map(_.getPath)
 
   /** O14: total stored bytes (pragma_database_size, dao.py:147-148). */
-  def sizeBytes(): Long = {
-    val root = new Path(warehouse)
-    if (!fs.exists(root)) 0L
-    else fs.getContentSummary(root).getLength
-  }
+  def sizeBytes(): Long = bytesUnder(new Path(warehouse))
+
+  /** Stored bytes of one service; 0 when it does not exist. */
+  def sizeBytes(service: String): Long = bytesUnder(servicePath(service))
+
+  private def bytesUnder(p: Path): Long =
+    try fs.getContentSummary(p).getLength
+    catch { case _: java.io.FileNotFoundException => 0L }
 }

@@ -128,6 +128,22 @@ class BenchHarnessSpec extends AnyFunSuite {
     }
   }
 
+  test("the contract line fits a 2000-char output tail with room to spare") {
+    // every headline query at 99.999 s, all suspect, on a contended box:
+    // the line as sbt prints it ("[info] " + line + newline) plus sbt's
+    // 74-char closing "[success] Total time: ..." line
+    val results = Queries.headline.map(_ -> 99.999)
+    val line = Bench.contractLine(results, Map.empty, contended = true,
+      suspects = results.size, sfDir = "/data/tpch/sf0.1")
+    val tail = "[info] " + line + "\n" + "x" * 74
+    assert(tail.getBytes("UTF-8").length <= 1900, s"${tail.length} B")
+    // and it still parses as a bench line, every query included
+    val back = Bench.parsePrevQueries(line)
+    assert(back.size === results.size && back.values.forall(_ === 99.999))
+    assert(line.contains(""""sf":"sf0.1""""))
+    assert(!line.contains(""""unit""""))
+  }
+
   test("bestKnownPoints merges per-(query, point) minima across SCALING rounds") {
     val dir = java.nio.file.Files.createTempDirectory("benchspec4").toFile
     def write(name: String, body: String): Unit = {

@@ -147,6 +147,29 @@ class StoreStreamSpec extends SparkSpec {
     assert(console.run("SELECT definitely not sql !!").isLeft)
   }
 
+  test("a service dropped after it was looked up reads as empty") {
+    val wh = tmp("graft-wh-gone")
+    val store = new ServiceStore(spark, wh)
+    store.append(Ingest.pipeline((lines(3, "alpha") ++ lines(2, "beta"))
+      .toDF("value"), GeoIp.demoRanges(spark)))
+    val cols = store.read("beta").columns.toSeq
+    store.drop("beta")
+    // the read of a vanished directory: empty, same columns, no throw
+    val gone = store.read("beta")
+    assert(gone.count() === 0L && gone.columns.toSeq === cols)
+    // also when the store's schema is first inferred after the drop
+    val fresh = new ServiceStore(spark, wh)
+    assert(fresh.read("beta").count() === 0L)
+    assert(fresh.read("alpha").count() === 3L)
+    // console views rebuilt from a listing taken before the drop
+    val console = new Console(spark, store)
+    console.refreshShims(Seq("alpha", "beta"))
+    assert(console.run("SELECT count(*) FROM beta").toOption.get
+      .head().getLong(0) === 0L)
+    assert(console.run("SELECT count(*) FROM alpha").toOption.get
+      .head().getLong(0) === 3L)
+  }
+
   test("console: db-size scalar is TTL-cached (O21)") {
     val store = new ServiceStore(spark, tmp("graft-wh-ttl"))
     store.append(Ingest.pipeline(lines(2, "svc").toDF("value"),

@@ -4,7 +4,12 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.Files
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.api.WebApi
+import graft.operators.Reports
+import graft.plans.SargableDates
 import graft.sources.{GeoIp, Ingest}
 import graft.store.ServiceStore
 
@@ -40,6 +45,169 @@ class WebApiSpec extends SparkSpec {
     }
     store.append(Ingest.pipeline(lines.toDF("value"), GeoIp.demoRanges(spark)))
     store
+  }
+
+  /** Jobs the service starts, seen by a listener on the shared
+    * session: streaming micro-batches are left out, and so are the
+    * fence jobs [[jobsOf]] runs to know the listener has caught up.
+    */
+  private final class JobLog extends SparkListener {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val fences = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      val p = Option(e.properties).getOrElse(new java.util.Properties)
+      Option(p.getProperty("spark.jobGroup.id")) match {
+        case Some(g) if g.startsWith("webapispec-fence") => fences.add(g)
+        case _ if p.getProperty("sql.streaming.queryId") != null => ()
+        case _ => jobs.incrementAndGet()
+      }
+    }
+  }
+
+  /** Wait until every job started before now has reached `log`: the
+    * listener bus delivers events in order, so a fence job run after
+    * them (on its own thread, so no job group leaks) arrives last.
+    */
+  private def fence(log: JobLog): Unit = {
+    val id = s"webapispec-fence-${java.util.UUID.randomUUID()}"
+    val t = new Thread(() => {
+      spark.sparkContext.setJobGroup(id, "listener fence")
+      spark.sparkContext.parallelize(Seq(1), 1).count()
+    })
+    t.start(); t.join()
+    val deadline = System.nanoTime() + 60000000000L
+    while (!log.fences.contains(id) && System.nanoTime() < deadline) Thread.sleep(10)
+    assert(log.fences.contains(id), "listener bus did not catch up")
+  }
+
+  private def jobsOf(log: JobLog)(body: => Any): Int = {
+    fence(log)
+    val before = log.jobs.get()
+    body
+    fence(log)
+    log.jobs.get() - before
+  }
+
+  /** Executed plans of one session's queries, in completion order
+    * (delivered on the same listener queue as [[JobLog]], so a
+    * [[fence]] covers them too).
+    */
+  private final class Plans extends QueryExecutionListener {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+    override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    def all: Seq[QueryExecution] =
+      scala.jdk.CollectionConverters.IteratorHasAsScala(seen.iterator).asScala.toSeq
+  }
+
+  test("small report requests run one job each; only a store's first read infers its schema") {
+    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    val callerConfs = keys.map(spark.conf.getOption)
+    val api = new WebApi(spark, seededStore())
+    val port = api.start()
+    val log = new JobLog
+    spark.sparkContext.addSparkListener(log)
+    try {
+      def jobs(path: String): Int = jobsOf(log) {
+        val (code, body) = get(port, path)
+        assert(code === 200, body)
+      }
+      val first = jobs("/api/blog/count")
+      val again = jobs("/api/blog/count")
+      assert(again === 1)
+      assert(first === again + 1, "the first read runs the one schema job")
+      assert(jobs("/api/shop/count") === 1, "a second service reuses the schema")
+      assert(jobs("/api/blog/average/generation_time") === 1)
+      assert(jobs("/api/blog/count-group/ip/path?limit=2") === 1)
+      assert(jobs("/api/blog/report") <= 2)
+      // the caller's session keeps its own planning confs
+      assert(keys.map(spark.conf.getOption) === callerConfs)
+    } finally {
+      spark.sparkContext.removeSparkListener(log)
+      api.stop()
+    }
+  }
+
+  test("report bodies equal Reports on the caller's session, on either side of the size rule") {
+    val advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val callerAdvisory = spark.conf.getOption(advisory)
+    spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations :+ SargableDates
+    val store = seededStore()
+    val api = new WebApi(spark, store, days = 5000)
+    val port = api.start()
+    val (smallPlans, callerPlans) = (new Plans, new Plans)
+    api.smallSession.listenerManager.register(smallPlans)
+    val log = new JobLog
+    spark.sparkContext.addSparkListener(log)
+    try {
+      val df = store.read("blog")
+      val (a, b) = (Some("2020-01-01"), Some("2020-01-02"))
+      def json(r: org.apache.spark.sql.DataFrame): String =
+        r.toJSON.collect().mkString("[", ",", "]")
+      val dated = "/api/blog/count?start=2020-01-01&stop=2020-01-01"
+      val want = Seq(
+        dated -> json(Reports.dailyCount(df, "datetime", None, a, a)),
+        "/api/blog/count?field=ip&start=2020-01-01&stop=2020-01-02" ->
+          json(Reports.dailyCount(df, "datetime", Some("ip"), a, b)),
+        "/api/blog/average/generation_time" ->
+          json(Reports.dailyAverage(df, "datetime", "generation_time")),
+        "/api/blog/count-group/ip/path?limit=2" ->
+          json(Reports.topNPerDay(df, "datetime", "ip", "path",
+            distinct = true, ascending = false, n = 2)),
+        "/api/blog/report" -> json(Reports.alignByDate(
+          Reports.dailyCount(df, "datetime"),
+          Reports.dailyCount(df, "datetime", Some("ip")))),
+        "/api/blog/anomaly" -> json(Reports.anomalyDays(df, "datetime")),
+        "/api/blog/ewma" -> json(Reports.ewmaDaily(df, "datetime")))
+      // ewmaDaily ends in an aggregate with no ORDER BY: its rows are
+      // compared as a set, every other body byte for byte
+      def norm(path: String, body: String): Any =
+        if (path.endsWith("/ewma")) body.stripPrefix("[").stripSuffix("]")
+          .split("(?<=\\}),(?=\\{)").toSet
+        else body
+      // from here on, the caller's session runs only what the service sends it
+      fence(log)
+      spark.listenerManager.register(callerPlans)
+      val paths = want.map(_._1) ++
+        Seq("/api/dashboard?date=2020-01-01", "/services/blog", "/?date=2020-01-01")
+      def bodies(): Map[String, String] = {
+        fence(log)
+        val got = paths.map { p =>
+          val (c, body) = get(port, p); assert(c === 200, p); p -> body }.toMap
+        fence(log)
+        got
+      }
+
+      // a small store: every report runs in the one-partition session
+      val small = bodies()
+      for ((p, w) <- want) assert(norm(p, small(p)) === norm(p, w), p)
+      val plans = smallPlans.all
+      assert(plans.size >= paths.size)
+      assert(callerPlans.seen.isEmpty, "a small report ran in the caller's session")
+      val datedScan = plans.head.executedPlan.collect { case s: FileSourceScanExec => s }
+      assert(datedScan.nonEmpty, plans.head.executedPlan.toString)
+      val pushed = datedScan.map(_.metadata.getOrElse("PushedFilters", "")).mkString
+      assert(pushed.contains("GreaterThanOrEqual(datetime") &&
+        pushed.contains("LessThan(datetime"), s"SargableDates not applied: $pushed")
+
+      // an input larger than one advisory partition keeps the caller's session
+      spark.conf.set(advisory, "1b")
+      val large = bodies()
+      for (p <- paths) assert(norm(p, large(p)) === norm(p, small(p)), p)
+      assert(callerPlans.all.size === plans.size)
+      assert(smallPlans.all.size === plans.size)
+    } finally {
+      spark.sparkContext.removeSparkListener(log)
+      callerAdvisory match {
+        case Some(v) => spark.conf.set(advisory, v)
+        case None => spark.conf.unset(advisory)
+      }
+      spark.listenerManager.unregister(callerPlans)
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations.filterNot(_ == SargableDates)
+      api.stop()
+    }
   }
 
   test("routes: dashboard, catalog, count, average, top-N, report, sql, nginx") {
