@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
@@ -18,6 +20,10 @@ import graft.store.ServiceStore
   * sbt "runMain graft.GraftMain --syslog-port 65140 --web-port 8080 \
   *   --warehouse /var/lib/graft/wh [--geoip-blocks b.csv --geoip-locations l.csv]"
   * ```
+  *
+  * Each micro-batch appends, then runs the store's bounded small-file
+  * compaction ([[ServiceStore.compactSmallFiles]]) on the same thread,
+  * so maintenance is serialized with the store's only writer.
   *
   * Shutdown (SIGINT/SIGTERM) mirrors the reference's finally-block
   * flush (`__main__.py:85-98`): drain everything already received
@@ -86,6 +92,8 @@ object GraftMain {
     geo.cache().count()
     geo6.foreach(_.cache().count())
 
+    // finishes a swap a crash cut short before the first request
+    store.compactSmallFiles()
     val stream = spark.readStream
       .format("graft-udp")
       .option("port", conf.syslogPort.toString)
@@ -93,8 +101,15 @@ object GraftMain {
       .writeStream
       .option("checkpointLocation", conf.checkpoint)
       .trigger(Trigger.ProcessingTime(s"${conf.periodSeconds} seconds"))
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
         store.append(Ingest.pipeline(batch, geo, geoRangesV6 = geo6))
+        // a failed pass must not fail the batch: its rows are already
+        // in, and a replayed batch would append them twice. The next
+        // pass finishes or retries it.
+        try { store.compactSmallFiles(); () }
+        catch { case NonFatal(e) =>
+          System.err.println(s"graft: maintenance after batch $batchId failed: $e")
+        }
       }
       .start()
 
@@ -103,15 +118,24 @@ object GraftMain {
     (stream, api, boundPort)
   }
 
+  /** The settings [[main]] builds its session with. The codegen cache
+    * is static (read when the session is built): Spark's default of 100
+    * compiled classes thrashes under the report mix, which compiles
+    * ~120 distinct class bodies per run, so most request plans would
+    * recompile code compiled minutes before.
+    */
+  val SessionConf: Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> "32",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false",
+    "spark.sql.codegen.cache.maxEntries" -> "1000")
+
   def main(args: Array[String]): Unit = {
     val conf = parseArgs(args)
-    val spark = SparkSession.builder()
-      .master(conf.master)
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SessionConf.foldLeft(
+        SparkSession.builder().master(conf.master).appName("graft")) {
+      case (b, (k, v)) => b.config(k, v)
+    }.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations :+ graft.plans.SargableDates

@@ -48,6 +48,16 @@ import graft.store.ServiceStore
   * caller's session and plans exactly as before, at any store size.
   * `/sql` always runs in the caller's session: arbitrary SQL has no
   * size bound.
+  *
+  * Reads and maintenance: every handler runs under the store's read
+  * guard ([[ServiceStore.reading]]). After each micro-batch append the
+  * live loop rewrites any service's small files
+  * ([[ServiceStore.compactSmallFiles]]) and swaps them in under the
+  * exclusive side of that guard, so a request never reads a retired
+  * file and never sees a service empty or half swapped. The swap waits
+  * at most [[ServiceStore.SwapWaitMs]] for running requests, then
+  * skips that pass. The `/sql` views are rebuilt whenever the store
+  * changed since they were built, so they see every completed append.
   */
 final class WebApi(spark: SparkSession, store: ServiceStore,
                    topLimit: Int = 5, maxRows: Int = 10000, days: Int = 30) {
@@ -79,10 +89,6 @@ final class WebApi(spark: SparkSession, store: ServiceStore,
   private val console = new Console(spark, store)
   private var server: HttpServer = _
   private var pool: java.util.concurrent.ExecutorService = _
-  // shim views are rebuilt at most every 30 s (O21 discipline: the
-  // db-size pragma and catalog listing are not per-request work)
-  private val ShimTtlMillis = 30000L
-  @volatile private var shimsRefreshedAt = 0L
 
   def start(port: Int = 0): Int = {
     server = HttpServer.create(new InetSocketAddress(port), 0)
@@ -94,8 +100,8 @@ final class WebApi(spark: SparkSession, store: ServiceStore,
     server.createContext("/sql", handler(sql))
     server.createContext("/nginx", handler(nginx))
     // a pooled executor so one long-running SQL console query cannot
-    // block every other endpoint (handlers are stateless; the shim TTL
-    // and size cache already guard their shared state)
+    // block every other endpoint (handlers are stateless; the console
+    // and its size cache guard their shared state)
     pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     server.setExecutor(pool)
     server.start()
@@ -275,11 +281,7 @@ final class WebApi(spark: SparkSession, store: ServiceStore,
       .exists(_.startsWith("application/x-www-form-urlencoded")) ||
       body.startsWith("sql=")
     val formSql = if (mayBeForm) formField(body, "sql") else None
-    val now = System.currentTimeMillis()
-    if (now - shimsRefreshedAt > ShimTtlMillis) {
-      console.refreshShims()
-      shimsRefreshedAt = now
-    }
+    console.refreshIfChanged()
     if (ex.getRequestMethod == "GET") sqlHtml(None)
     else formSql match {
       case Some(s) => sqlHtml(Some(s))
@@ -355,7 +357,7 @@ final class WebApi(spark: SparkSession, store: ServiceStore,
   private def handler(f: HttpExchange => (Int, String)):
       com.sun.net.httpserver.HttpHandler = { ex =>
     val (code, body) =
-      try f(ex)
+      try store.reading(f(ex))
       catch { case e: Throwable => (500, s"""{"error":${jsonString(e.getMessage)}}""") }
     if (code == 302) { // body carries the redirect target
       ex.getResponseHeaders.set("Location", body)

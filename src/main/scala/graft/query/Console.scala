@@ -39,6 +39,22 @@ final class Console(spark: SparkSession, store: ServiceStore) {
   /** (Re)build the catalog shim views from current store state. */
   def refreshShims(): Unit = refreshShims(store.list())
 
+  private var shimsVersion: Option[Long] = None
+
+  /** Rebuild the shims only if the store changed since they were last
+    * built here: a view keeps the file list it was built from, so an
+    * older one misses later appends and, after a compaction, names
+    * retired files. Call it under [[ServiceStore.reading]], with the
+    * query that reads the views.
+    */
+  def refreshIfChanged(): Unit = synchronized {
+    val v = store.version
+    if (!shimsVersion.contains(v)) {
+      refreshShims()
+      shimsVersion = Some(v)
+    }
+  }
+
   /** Rebuild the shims from a listing of `services`; one dropped since
     * that listing gets an empty view.
     */

@@ -1,6 +1,11 @@
 package graft.store
 
-import org.apache.hadoop.fs.Path
+import java.nio.charset.StandardCharsets
+import java.util.concurrent.{ConcurrentHashMap, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
+import java.util.concurrent.locks.ReentrantReadWriteLock
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
@@ -22,16 +27,38 @@ import org.apache.spark.sql.types.{StringType, StructType}
   * schema job and lists only its own service's directory.
   */
 final class ServiceStore(spark: SparkSession, warehouse: String) {
+  import ServiceStore._
 
   val ServicePattern = "^\\w+$"
 
   private def fs = new Path(warehouse)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  private val shared = sharedOf(fs.makeQualified(new Path(warehouse)).toString)
+
   private def servicePath(service: String) =
     new Path(warehouse, s"service=$service")
 
   def checkService(service: String): Boolean = service.matches(ServicePattern)
+
+  /** Moves with every append, drop and rewrite swap made through any
+    * store over this warehouse in this JVM. A reader that keeps a plan
+    * over the store's files (the console's views) rebuilds it when
+    * this changes; read it before listing, so a change made meanwhile
+    * shows as a change next time.
+    */
+  def version: Long = shared.version.get
+
+  /** Runs `body` under the shared side of the store's read guard: no
+    * rewrite swap runs meanwhile, so a frame listed and collected
+    * inside `body` reads exactly the files it listed (see [[compact]]).
+    * Appends are not held back. Reentrant.
+    */
+  def reading[A](body: => A): A = {
+    val lock = shared.guard.readLock()
+    lock.lock()
+    try body finally lock.unlock()
+  }
 
   @volatile private var schema: Option[StructType] = None
 
@@ -52,8 +79,10 @@ final class ServiceStore(spark: SparkSession, warehouse: String) {
     * lands in its own directory (first sight creates it — the
     * reference's dynamic CREATE TABLE, syslog_protocol.py:61-65).
     */
-  def append(df: DataFrame): Unit =
+  def append(df: DataFrame): Unit = {
     df.write.mode("append").partitionBy("service").parquet(warehouse)
+    shared.version.incrementAndGet()
+  }
 
   /** O7: list services — partition-directory scan, sorted by name
     * (dao.py:150-160).
@@ -75,12 +104,16 @@ final class ServiceStore(spark: SparkSession, warehouse: String) {
 
   /** O4: drop a service's data (dao.py:187-193). */
   def drop(service: String): Unit =
-    if (exists(service)) { fs.delete(servicePath(service), true); () }
+    if (exists(service)) {
+      fs.delete(servicePath(service), true)
+      shared.version.incrementAndGet()
+    }
 
   /** O8 input: one service's entries, planned in `session`. Only
-    * `service=<s>/` is listed and scanned. A service that vanished
-    * after the caller looked (a `drop`, or a compaction swap window)
-    * reads as empty, as a filter over the whole warehouse would.
+    * `service=<s>/` is listed and scanned. A service dropped after the
+    * caller looked reads as empty, as a filter over the whole
+    * warehouse would. The frame keeps the files listed here: collect
+    * it inside [[reading]] so no rewrite retires them first.
     */
   def read(service: String, session: SparkSession = spark): DataFrame = {
     val s = storeSchema()
@@ -158,24 +191,27 @@ final class ServiceStore(spark: SparkSession, warehouse: String) {
     * file-open overhead. Rewrites one service's partition into
     * `ceil(bytes / targetFileBytes)` evenly-sized files (repartition —
     * a shuffle of that service's data only — balances them; coalesce
-    * would inherit the skew being repaired).
+    * would inherit the skew being repaired). The live loop runs the
+    * bounded [[compactSmallFiles]] instead; this is the full rewrite.
     *
-    * Concurrency contract (safe against the live ingest loop):
+    * Concurrency contract, shared by every rewrite (compact,
+    * compactSorted, expire, compactSmallFiles):
     *  - SNAPSHOT-SCOPED: only the parquet files listed at scan time
-    *    are compacted and retired. A file a concurrent append lands
-    *    AFTER the snapshot is moved back into the live partition
-    *    right after the swap, so completed appends are never lost.
-    *  - The swap itself is two directory renames; readers can observe
-    *    a brief window (milliseconds) in which the partition directory
-    *    is absent and the service reads as empty. An append whose
-    *    write is IN FLIGHT during that window can fail its job commit
-    *    and must be retried by the caller — completed appends are the
-    *    ones guaranteed to survive.
-    *  - Crash-safe: a failure before the swap leaves the partition
-    *    untouched; a crash between the two renames parks the data
-    *    under `.retired-service=…`, which the next [[compact]] call
-    *    restores before doing anything else (dot-prefixed dirs are
-    *    invisible to readers and [[list]]).
+    *    are rewritten and retired. The live directory itself is never
+    *    moved, so an append (before, during or after the rewrite) only
+    *    ever adds files that the swap leaves alone, and never fails.
+    *  - READERS: the swap runs under the exclusive side of the store's
+    *    read guard. A reader that plans and runs its query inside
+    *    [[reading]] (every `WebApi` handler) sees a service's files as
+    *    one consistent set — never a retired file, never a partly
+    *    swapped or empty service. A reader outside the guard can see,
+    *    for the milliseconds of the swap, both or neither of the old
+    *    and new files.
+    *  - CRASH-SAFE: the swap is journalled (see [[swap]]). A failure
+    *    before the journal exists leaves the partition untouched; after
+    *    it, the next rewrite of that service (or the maintenance pass
+    *    `GraftMain.start` runs) carries the journal out. Either way no
+    *    row is lost or duplicated.
     *
     * Returns (files before, files after).
     */
@@ -193,35 +229,66 @@ final class ServiceStore(spark: SparkSession, warehouse: String) {
     * swap concurrency contract as [[compact]].
     */
   def compactSorted(service: String, sortCol: String,
-                    targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    var before = 0
-    val (after, _) = rewritePartition(service, () => ()) { (df, snapshot) =>
-      before = snapshot.size
-      val bytes = snapshot.map(fs.getFileStatus(_).getLen).sum
-      val nFiles = math.max(1L,
-        (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-      df.repartitionByRange(nFiles, col(sortCol))
-        .sortWithinPartitions(col(sortCol))
-    }
-    (before, after)
-  }
+                    targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) =
+    rewritePartition(service)(identity) { (df, bytes) =>
+      sortedFiles(df, sortCol, bytes, targetFileBytes)
+    }.fold((0, 0)) { case (before, after, _) => (before, after) }
 
   /** Test seam: `beforeSwap` runs between the compaction scan and the
-    * directory swap — the race window a concurrent append must
-    * survive (CompactionSpec injects an append there).
+    * swap — the race window a concurrent append must survive
+    * (CompactionSpec injects an append there).
     */
   private[graft] def compact(service: String, targetFileBytes: Long,
-                             beforeSwap: () => Unit): (Int, Int) = {
-    var before = 0
-    val (after, _) = rewritePartition(service, beforeSwap) { (df, snapshot) =>
-      before = snapshot.size
-      val bytes = snapshot.map(fs.getFileStatus(_).getLen).sum
-      val nFiles = math.max(1L,
-        (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-      df.repartition(nFiles)
+                             beforeSwap: () => Unit): (Int, Int) =
+    rewritePartition(service, beforeSwap)(identity) { (df, bytes) =>
+      df.repartition(filesFor(bytes, targetFileBytes))
+    }.fold((0, 0)) { case (before, after, _) => (before, after) }
+
+  /** Live-loop maintenance, which the ingest stream runs right after
+    * each append (so it never races the store's only writer). A
+    * service whose live directory holds at least [[MinSmallFiles]]
+    * files below [[TargetFileBytes]] has those files, and only those,
+    * rewritten into one file sorted by `datetime` (one per
+    * [[TargetFileBytes]] of input, in disjoint ranges, if they add up
+    * to more). Larger files are never read: a pass rewrites the last
+    * pass's output plus the micro-batch files since, under
+    * [[MinSmallFiles]] × [[TargetFileBytes]] per service however large
+    * the store grows, and a service holds at most [[MinSmallFiles]]
+    * small files between passes. The swap waits at
+    * most [[SwapWaitMs]] for readers to leave the guard; if they do
+    * not, the pass is dropped for that service (its staged file is
+    * deleted, the partition is unchanged) and the next pass tries
+    * again. Returns the services whose small files were rewritten.
+    */
+  def compactSmallFiles(): Seq[String] =
+    compactSmallFiles(TargetFileBytes, SwapWaitMs, () => ())
+
+  /** Test seam: a smaller `targetFileBytes` makes a test-sized file
+    * large; `afterStep` runs after each rename or delete of a swap (a
+    * throw there is a crash between them).
+    */
+  private[graft] def compactSmallFiles(targetFileBytes: Long, swapWaitMs: Long,
+                                       afterStep: () => Unit): Seq[String] =
+    list().filter { service =>
+      rewritePartition(service, swapWaitMs = swapWaitMs, afterStep = afterStep) { live =>
+        val small = live.filter(_.getLen < targetFileBytes)
+        if (small.size >= MinSmallFiles) small else Seq.empty
+      } { (df, bytes) => sortedFiles(df, "datetime", bytes, targetFileBytes) }
+        .isDefined
     }
-    (before, after)
+
+  /** `df` as `ceil(bytes / targetFileBytes)` files of disjoint `sortCol`
+    * ranges, each sorted by it. One file needs no shuffle.
+    */
+  private def sortedFiles(df: DataFrame, sortCol: String, bytes: Long,
+                          targetFileBytes: Long): DataFrame = {
+    val n = filesFor(bytes, targetFileBytes)
+    (if (n == 1) df.coalesce(1) else df.repartitionByRange(n, col(sortCol)))
+      .sortWithinPartitions(col(sortCol))
   }
+
+  private def filesFor(bytes: Long, targetFileBytes: Long): Int =
+    math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
 
   /** Retention TTL — drop a service's entries older than `keepSince`
     * (the lifecycle op the reference delegates to manual SQL; at a 5 s
@@ -233,9 +300,9 @@ final class ServiceStore(spark: SparkSession, warehouse: String) {
     * rides [[compact]]'s snapshot/swap machinery, so it inherits the
     * same concurrency contract: completed concurrent appends survive
     * (and are NOT ttl-filtered — they are newer than the snapshot by
-    * construction), and a crash parks data under the retired name for
-    * the next call to restore. Returns (rows kept, rows dropped), both
-    * observed on the rewrite pass itself — no extra store scans.
+    * construction), and a crash is finished by the next rewrite.
+    * Returns (rows kept, rows dropped), both observed on the rewrite
+    * pass itself — no extra store scans.
     */
   def expire(service: String, keepSince: java.sql.Timestamp,
              tsCol: String = "datetime"): (Long, Long) =
@@ -250,79 +317,137 @@ final class ServiceStore(spark: SparkSession, warehouse: String) {
                             tsCol: String,
                             beforeSwap: () => Unit): (Long, Long) = {
     val kept = org.apache.spark.sql.Observation()
-    val (_, snapshotRows) = rewritePartition(service, beforeSwap) { (df, _) =>
+    rewritePartition(service, beforeSwap)(identity) { (df, _) =>
       df.filter(col(tsCol) >= lit(keepSince))
         .observe(kept, count(lit(1)).as("kept"))
+    }.fold((0L, 0L)) { case (_, _, snapshotRows) =>
+      val k = kept.get("kept").asInstanceOf[Long]
+      (k, snapshotRows - k)
     }
-    val k = kept.get("kept").asInstanceOf[Long]
-    (k, snapshotRows - k)
   }
-
-  /** One lock object per service: lifecycle REWRITES (compact /
-    * compactSorted / expire) serialize against each other — they share
-    * the staging and retired paths, so two running at once on one
-    * service would collide on those directories and can strand or drop
-    * the partition. Appends never take the lock (they only ever ADD
-    * files to the live dir; the snapshot-scoped retirement in
-    * [[rewritePartition]] carries mid-rewrite appends across the swap
-    * — the tested contract). Per-service granularity keeps unrelated
-    * services' maintenance fully concurrent.
-    */
-  private val rewriteLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def rewriteLock(service: String): Object =
-    rewriteLocks.computeIfAbsent(service, _ => new Object)
 
   /** Shared snapshot→rewrite→swap core ([[compact]]'s concurrency
-    * contract). `build` receives the snapshot read (with a row-count
-    * observation already attached below it) and the snapshot file
-    * list, and returns the frame to write. Returns (files after the
-    * swap, snapshot rows). Holds the service's rewrite lock end-to-end
-    * (`beforeSwap` included — a racing rewrite launched there blocks
-    * until this one's swap completes).
+    * contract). `select` picks the snapshot from the live files (none:
+    * nothing to do); `build` receives the snapshot read (with a
+    * row-count observation already attached below it) and the
+    * snapshot's bytes, and returns the frame to write. Returns
+    * (snapshot files, files after the swap, snapshot rows), or None
+    * when there was nothing to rewrite or the guard did not come
+    * within `swapWaitMs`. Lifecycle rewrites of one service serialize
+    * on its rewrite lock, held end-to-end (`beforeSwap` included — a
+    * racing rewrite launched there blocks until this one's swap
+    * completes): they share the staging and journal paths.
     */
-  private def rewritePartition(service: String, beforeSwap: () => Unit)(
-      build: (DataFrame, Seq[Path]) => DataFrame): (Int, Long) =
-    rewriteLock(service).synchronized {
-      rewritePartitionLocked(service, beforeSwap)(build)
+  private def rewritePartition(service: String, beforeSwap: () => Unit = () => (),
+                               swapWaitMs: Long = Long.MaxValue,
+                               afterStep: () => Unit = () => ())(
+      select: Seq[FileStatus] => Seq[FileStatus])(
+      build: (DataFrame, Long) => DataFrame): Option[(Int, Int, Long)] =
+    shared.rewriteLocks.computeIfAbsent(service, _ => new Object).synchronized {
+      val ready = recover(service, swapWaitMs)
+      require(exists(service), s"unknown service: $service")
+      val snapshot = if (ready) select(parquetFiles(servicePath(service))) else Nil
+      if (snapshot.isEmpty) None
+      else rewriteFiles(service, snapshot, beforeSwap, swapWaitMs, afterStep)(build)
     }
 
-  private def rewritePartitionLocked(service: String, beforeSwap: () => Unit)(
-      build: (DataFrame, Seq[Path]) => DataFrame): (Int, Long) = {
-    val dir = servicePath(service)
-    val retired = new Path(warehouse, s".retired-service=$service")
-    // recover from a crash between a previous rewrite's two renames:
-    // the whole partition sits under the retired name — restore it
-    if (!fs.exists(dir) && fs.exists(retired)) fs.rename(retired, dir)
-    require(exists(service), s"unknown service: $service")
-    // the snapshot bounds the rewrite: exactly these files feed it,
-    // and exactly these files are retired afterwards
-    val snapshot = parquetFiles(dir)
-    val staging = new Path(warehouse, s".compact-service=$service")
-    fs.delete(staging, true)
+  private def rewriteFiles(service: String, snapshot: Seq[FileStatus],
+                           beforeSwap: () => Unit, swapWaitMs: Long,
+                           afterStep: () => Unit)(
+      build: (DataFrame, Long) => DataFrame): Option[(Int, Int, Long)] = {
+    val staging = stagingPath(service)
     val obs = org.apache.spark.sql.Observation()
-    val source = spark.read.parquet(snapshot.map(_.toString): _*)
+    val source = spark.read.parquet(snapshot.map(_.getPath.toString): _*)
       .observe(obs, count(lit(1)).as("snapshot_rows"))
-    build(source, snapshot)
+    build(source, snapshot.map(_.getLen).sum)
       .write.mode("overwrite").parquet(staging.toString)
+    val rows = obs.get("snapshot_rows").asInstanceOf[Long]
     beforeSwap()
-    fs.delete(retired, true)
-    fs.rename(dir, retired)
-    fs.rename(staging, dir)
-    // preserve concurrent appends: anything in the retired dir that was
-    // not in the snapshot landed after the scan — move it back live
-    val snapNames = snapshot.map(_.getName).toSet
-    parquetFiles(retired)
-      .filterNot(p => snapNames.contains(p.getName))
-      .foreach(p => fs.rename(p, new Path(dir, p.getName)))
-    fs.delete(retired, true)
-    (parquetFiles(dir).size, obs.get("snapshot_rows").asInstanceOf[Long])
+    val swapped = exclusively(swapWaitMs) {
+      swap(service, parquetFiles(staging).map(_.getPath.getName),
+        snapshot.map(_.getPath.getName), afterStep)
+    }
+    fs.delete(staging, true)
+    if (swapped) Some((snapshot.size, parquetFiles(servicePath(service)).size, rows))
+    else None
   }
 
-  private def parquetFiles(p: Path): Seq[Path] =
+  private def stagingPath(service: String) =
+    new Path(warehouse, s".compact-service=$service")
+
+  private def journalPath(service: String) =
+    new Path(warehouse, s".swap-service=$service")
+
+  /** The swap: a journal naming the staged files to move in and the
+    * snapshot files to delete is written to a side file and made
+    * visible by one rename; then it is carried out and removed. Every
+    * step is idempotent, so a journal found later (after a crash
+    * anywhere in between) is simply carried out again by [[recover]]:
+    * the staged files carry every snapshot row, so the result holds
+    * each row once. Before the journal exists, nothing live changed.
+    */
+  private def swap(service: String, staged: Seq[String], retired: Seq[String],
+                   afterStep: () => Unit): Unit = {
+    val journal = journalPath(service)
+    val pending = journal.suffix(".tmp")
+    val out = fs.create(pending, true)
+    try {
+      out.write((staged.map("+" + _) ++ retired.map("-" + _))
+        .mkString("\n").getBytes(StandardCharsets.UTF_8))
+      out.hsync()
+    } finally out.close()
+    fs.rename(pending, journal)
+    replay(service, afterStep)
+  }
+
+  private def replay(service: String, afterStep: () => Unit): Unit = {
+    val journal = journalPath(service)
+    val in = fs.open(journal)
+    val steps = try new String(in.readAllBytes(), StandardCharsets.UTF_8)
+      finally in.close()
+    steps.split("\n").filter(_.nonEmpty).foreach { step =>
+      val name = step.drop(1)
+      val staged = new Path(stagingPath(service), name)
+      if (step.head == '-') fs.delete(new Path(servicePath(service), name), false)
+      else if (fs.exists(staged)) fs.rename(staged, new Path(servicePath(service), name))
+      afterStep()
+    }
+    fs.delete(journal, false)
+  }
+
+  /** Before any rewrite: finish a swap a crash cut short (under the
+    * guard; false, rewrite skipped, if it did not come in time), then
+    * drop what a cut-short rewrite staged or half-wrote as a journal.
+    * Also restores a partition the earlier two-rename swap left parked
+    * under `.retired-service=…`.
+    */
+  private def recover(service: String, waitMs: Long): Boolean = {
+    val retired = new Path(warehouse, s".retired-service=$service")
+    if (!fs.exists(servicePath(service)) && fs.exists(retired))
+      fs.rename(retired, servicePath(service))
+    fs.delete(journalPath(service).suffix(".tmp"), false)
+    val done = !fs.exists(journalPath(service)) ||
+      exclusively(waitMs)(replay(service, () => ()))
+    if (done) fs.delete(stagingPath(service), true)
+    done
+  }
+
+  /** `body` under the exclusive side of the read guard, waiting at most
+    * `waitMs` for readers to leave; false, without running it, if they
+    * do not. A swap always changes [[version]].
+    */
+  private def exclusively(waitMs: Long)(body: => Unit): Boolean = {
+    val lock = shared.guard.writeLock()
+    lock.tryLock(waitMs, TimeUnit.MILLISECONDS) && {
+      try body
+      finally { shared.version.incrementAndGet(); lock.unlock() }
+      true
+    }
+  }
+
+  private def parquetFiles(p: Path): Seq[FileStatus] =
     fs.listStatus(p).toSeq
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath)
 
   /** O14: total stored bytes (pragma_database_size, dao.py:147-148). */
   def sizeBytes(): Long = bytesUnder(new Path(warehouse))
@@ -333,4 +458,45 @@ final class ServiceStore(spark: SparkSession, warehouse: String) {
   private def bytesUnder(p: Path): Long =
     try fs.getContentSummary(p).getLength
     catch { case _: java.io.FileNotFoundException => 0L }
+}
+
+object ServiceStore {
+
+  /** A service's small files are rewritten once it holds this many.
+    * A report request pays about 10 ms of CPU per file it opens (a
+    * service of ~27 micro-batch files answered in ~900 ms, of 2–4 in
+    * ~650 ms), so 16 small files cap that overhead near 150 ms. At the
+    * 5 s trigger a service reaches 16 every ~80 s, and each rewrite
+    * folds 15 new micro-batch files into the previous pass's output:
+    * a lower trigger would rewrite that growing file more often for a
+    * few ms per request. The same trade as Delta's auto-compaction
+    * (`minNumFiles`) and Iceberg's `min-input-files`.
+    */
+  val MinSmallFiles = 16
+
+  /** Files below this size count as small; compaction writes files of
+    * about this size (one parquet row-group-sized HDFS block).
+    */
+  val TargetFileBytes: Long = 128L * 1024 * 1024
+
+  /** How long a live-loop swap waits for readers before it skips the
+    * pass: a fifth of the 5 s trigger, so a long `/sql` query delays a
+    * micro-batch by at most that, never stalls the stream.
+    */
+  val SwapWaitMs = 1000L
+
+  /** State every store over one warehouse shares in this JVM: the read
+    * guard, the change [[ServiceStore.version]] and the per-service
+    * rewrite locks.
+    */
+  private final class Shared {
+    val guard = new ReentrantReadWriteLock()
+    val version = new AtomicLong()
+    val rewriteLocks = new ConcurrentHashMap[String, Object]()
+  }
+
+  private val byWarehouse = new ConcurrentHashMap[String, Shared]()
+
+  private def sharedOf(qualifiedWarehouse: String): Shared =
+    byWarehouse.computeIfAbsent(qualifiedWarehouse, _ => new Shared)
 }

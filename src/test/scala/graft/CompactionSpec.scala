@@ -219,4 +219,116 @@ class CompactionSpec extends SparkSpec {
     // readAll sees exactly the data; no dot-dirs leak into results
     assert(store.readAll().count() === 1L)
   }
+
+  // --- live-loop maintenance (compactSmallFiles): one large file plus
+  // MinSmallFiles one-row files; a 64 KB target stands in for 128 MB
+
+  private val target = 64L * 1024
+
+  private def maintenanceStore(wh: String): ServiceStore = {
+    val store = new ServiceStore(spark, wh)
+    def t(i: Int) = new java.sql.Timestamp(1577836800000L + i * 60000L)
+    // ~160 KB of distinct doubles: one file at or above the target
+    store.append((0 until 20000).map(i => (i.toLong, t(i), (i * 7919L % 100003) * 0.5))
+      .toDF("id", "datetime", "value").withColumn("service", lit("api")).coalesce(1))
+    // one row per slice, so one file per slice, out of time order
+    val small = (0 until ServiceStore.MinSmallFiles).map(i =>
+      (100000L + i, t(ServiceStore.MinSmallFiles - i), i * 1.0))
+    store.append(spark.sparkContext.parallelize(small, small.size)
+      .toDF("id", "datetime", "value").withColumn("service", lit("api")))
+    store
+  }
+
+  private def liveFiles(wh: String): Map[String, Long] = {
+    val fs = new org.apache.hadoop.fs.Path(wh)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(new org.apache.hadoop.fs.Path(wh, "service=api"))
+      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+      .map(s => s.getPath.getName -> s.getLen).toMap
+  }
+
+  private def ids(store: ServiceStore): Seq[Long] =
+    store.read("api").select("id").collect().map(_.getLong(0)).toSeq.sorted
+
+  private def rootEntries(wh: String): Set[String] =
+    new java.io.File(wh).list().toSet.filterNot(n => n == "_SUCCESS" || n == "._SUCCESS.crc")
+
+  test("small-file maintenance rewrites only the small files, sorted; a large file keeps its name and bytes") {
+    val wh = Files.createTempDirectory("graft-maint").toString
+    val store = maintenanceStore(wh)
+    val before = liveFiles(wh)
+    val (large, small) = before.partition(_._2 >= target)
+    assert(large.size === 1 && small.size === ServiceStore.MinSmallFiles, before.toString)
+    val largePath = java.nio.file.Paths.get(wh, "service=api", large.head._1)
+    val largeBytes = Files.readAllBytes(largePath)
+    val rows = ids(store)
+
+    assert(store.compactSmallFiles(target, 1000L, () => ()) === Seq("api"))
+    val after = liveFiles(wh)
+    assert(after.size === 2, after.toString)
+    assert(Files.readAllBytes(largePath).sameElements(largeBytes))
+    val merged = (after.keySet - large.head._1).head
+    val times = spark.read.parquet(s"$wh/service=api/$merged")
+      .select("datetime").collect().map(_.getTimestamp(0).getTime).toSeq
+    assert(times.size === ServiceStore.MinSmallFiles && times === times.sorted)
+    assert(ids(store) === rows)
+    assert(rootEntries(wh) === Set("service=api"))
+    // two files, below the trigger: the next pass does nothing
+    assert(store.compactSmallFiles(target, 1000L, () => ()) === Nil)
+    assert(liveFiles(wh) === after)
+  }
+
+  test("a crash between the renames of a small-file swap is finished by the next pass, every row once") {
+    // the swap moves the new file in, then deletes the small files one
+    // by one: crash after the first step (every small row on disk
+    // twice), after one delete, and after the last step
+    Seq(1, 2, ServiceStore.MinSmallFiles + 1).foreach { crashAfter =>
+      val wh = Files.createTempDirectory("graft-maint-crash").toString
+      val store = maintenanceStore(wh)
+      val rows = ids(store)
+      var steps = 0
+      intercept[IllegalStateException] {
+        store.compactSmallFiles(target, 1000L, () => {
+          steps += 1
+          if (steps == crashAfter) throw new IllegalStateException("crash")
+        })
+      }
+      val onDisk = spark.read.parquet(s"$wh/service=api").count()
+      assert(onDisk === rows.size + ServiceStore.MinSmallFiles - (crashAfter - 1),
+        s"crash after step $crashAfter")
+      // a restarted service's first pass carries the journal out
+      val restarted = new ServiceStore(spark, wh)
+      assert(restarted.compactSmallFiles(target, 1000L, () => ()) === Nil)
+      assert(ids(restarted) === rows, s"crash after step $crashAfter")
+      assert(liveFiles(wh).size === 2)
+      assert(rootEntries(wh) === Set("service=api"))
+    }
+  }
+
+  test("a small-file swap that cannot get the read guard in time leaves the partition unchanged") {
+    val wh = Files.createTempDirectory("graft-maint-guard").toString
+    val store = maintenanceStore(wh)
+    val before = liveFiles(wh)
+    val entered = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val reader = new Thread(() => store.reading {
+      entered.countDown()
+      release.await()
+    })
+    reader.start()
+    try {
+      entered.await()
+      val v = store.version
+      assert(store.compactSmallFiles(target, 200L, () => ()) === Nil)
+      assert(liveFiles(wh) === before)
+      assert(store.version === v)
+      assert(rootEntries(wh) === Set("service=api"))
+    } finally {
+      release.countDown()
+      reader.join()
+    }
+    // the next pass, with no reader in the way, goes through
+    assert(store.compactSmallFiles(target, 1000L, () => ()) === Seq("api"))
+    assert(liveFiles(wh).size === 2)
+  }
 }

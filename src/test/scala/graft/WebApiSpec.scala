@@ -402,4 +402,27 @@ class WebApiSpec extends SparkSpec {
       assert(c2 === 200 && small === """[{"one":1}]""")
     } finally api.stop()
   }
+
+  test("sql views follow the store: later appends show, and a compaction breaks none") {
+    val store = new ServiceStore(spark,
+      Files.createTempDirectory("graft-wh-views").toString)
+    def rows(from: Int, n: Int) = Ingest.pipeline((from until from + n).map { i =>
+      s"""<190>x: {"service": "views", "ip": "10.0.1.$i", "host": "h", """ +
+        s""""path": "/v$i", "status": "200", "referrer": "", "user_agent": "curl/8.0", """ +
+        s""""length": $i, "generation_time_milli": 0.5, "date": "2020-01-01T06:00:00+00:00"}"""
+    }.toDF("value"), GeoIp.demoRanges(spark))
+    store.append(rows(0, 10))
+    val api = new WebApi(spark, store)
+    val port = api.start()
+    try {
+      def count() = post(port, "/sql", "SELECT count(*) AS n FROM views")
+      assert(count() === ((200, """[{"n":10}]""")))
+      // an append right after the views were built
+      store.append(rows(10, 5))
+      assert(count() === ((200, """[{"n":15}]""")))
+      // a compaction retires every file the views were built over
+      store.compact("views")
+      assert(count() === ((200, """[{"n":15}]""")))
+    } finally api.stop()
+  }
 }
