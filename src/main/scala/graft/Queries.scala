@@ -5179,7 +5179,8 @@ object Queries {
   /** The Lloyd iteration count every graph-family entry tier declares
     * (and [[lloydCentCtes]] unrolls) — one constant so the Spark side,
     * the oracle side, and the Scaladoc can never disagree. ONE
-    * iteration is the GraphSweep-measured knee (r14, sf0.1): serving
+    * iteration is the knee the r14 serving-config sweep measured at
+    * sf0.1 (COVERAGE.md, "Lloyd-refined entry centroids"): serving
     * recall@10 avg/min 0.81/0.60 (raw seed) → 0.90/0.70 with the
     * beam-20/rounds-4/probe-3 walk, while iteration 2 measured equal
     * recall and iteration 3 slightly worse (over-fitting the seed's
@@ -5652,7 +5653,8 @@ object Queries {
     // bucket-pruned reads alone — the corpus relation is never
     // scanned (plan-pinned in PlanShapeSpec). The oracle replays the
     // identical walk over the unrolled NN-Descent edge table.
-    // Declared serving config (GraphSweep-measured r14): ⌈√n⌉ entry
+    // Declared serving config (measured by the r14 serving-config
+    // sweep, COVERAGE.md "Lloyd-refined entry centroids"): ⌈√n⌉ entry
     // cells refined by ONE Lloyd iteration (raw first-⌈√n⌉ seeds were
     // the r13 residual: recall@10 0.81 avg / 0.60 min at sf0.1), the
     // FULL stored 20-head beam (beam 16 left the last 4 heads of every
@@ -5662,7 +5664,7 @@ object Queries {
     // more serve wall, centroid-nearest entry heads measured WORSE on
     // min (0.60 — a central entry set is less diverse), build k=16 and
     // 5 descent rounds bought nothing — each priced and rejected in
-    // the r14 GraphSweep.
+    // that sweep.
     "sim_topk_graph" -> Decl(
       (s, d) => {
         import org.apache.spark.sql.functions.col
@@ -6448,12 +6450,14 @@ object Queries {
     // IVFPQ with RESIDUAL encoding — FAISS's quantize-x-minus-c(x)
     // recipe (Jégou et al. 2011 §III), the standard recall lever at
     // equal m/probe, declared as the measured NEGATIVE result the r15
-    // PqSweep recorded on this corpus: recall@10 0.37 vs raw 0.49-0.53
-    // at every probe and quantizer axis (raw seeds / 1 / 3 Lloyd
-    // rounds), probe-INVARIANT because the exact q·c(x) term dominates
-    // ranking when the quantizer explains none of a near-uniform
-    // corpus's variance (residual rel_dist2 0.34-0.37 vs raw 0.35 — no
-    // shrink, so the residual premise fails here). The raw tier stays
+    // PQ sweep recorded on this corpus (COVERAGE.md, "Residual-encoding
+    // IVFPQ"; m=16, iters=2, ⌈√n⌉ cells): recall@10 0.37 vs raw
+    // 0.49-0.53 at every probe (1/2/4) and quantizer axis (raw seeds /
+    // 1 / 3 Lloyd rounds), probe-INVARIANT because the exact q·c(x)
+    // term dominates ranking when the quantizer explains none of a
+    // near-uniform corpus's variance (residual rel_dist2 0.34-0.37 vs
+    // raw 0.35 — no shrink, so the residual premise fails here). The
+    // raw tier stays
     // the declared serving config; this query keeps the rejected
     // variant oracle-gated so the finding reproduces cross-engine.
     "sim_topk_ivfpq_residual" -> Decl(
@@ -6904,7 +6908,7 @@ object Queries {
     // standing layout; sim_topk_ivfpq_atrest keeps the lifecycle price
     "sim_topk_ivfpq_atrest_serve",
     // round-15 addition: the residual-encoding IVFPQ variant — kept
-    // declared and priced although the PqSweep REJECTED it for the
+    // declared and priced although the r15 PQ sweep REJECTED it for the
     // serving tier (recall@10 0.37 vs raw 0.49-0.53 at equal budget on
     // this corpus); the negative result stays measured round-over-round
     "sim_topk_ivfpq_residual",

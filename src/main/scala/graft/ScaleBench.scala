@@ -123,8 +123,10 @@ object ScaleBench {
     // claim here is one bounded walk per inserted node (cost ∝ delta
     // × serve-walk cost, never a re-descent), so the lifecycle curve
     // should track sim_topk_graph's build-dominated shape; the append
-    // phase ALONE is priced by graft.AppendSweep (build/append/probe
-    // split + delta-proportionality at two corpus sizes)
+    // phase ALONE was priced in r17 (COVERAGE.md, "The append phase
+    // priced ALONE"): a fixed 200-row graph append took 18.6→21.5 s
+    // across the sf0.1→sf1 decade, dominated by the walk's fixed
+    // 4-round cost at these sizes
     "sim_topk_graph_append")
 
   /** The subset also measured at the SECOND synthesized decade (sf10 =
@@ -188,8 +190,9 @@ object ScaleBench {
     "text_vocab_growth", "pipeline_nb_auc",
     // round 17: the IVFPQ append lifecycle completes its decade (the
     // r16 verdict's missing point) — the end-to-end curve should
-    // track the fresh-build query's, and the append phase alone is
-    // separately priced by graft.AppendSweep
+    // track the fresh-build query's; priced alone in r17 (COVERAGE.md,
+    // "The append phase priced ALONE"), a fixed 200-row IVFPQ append
+    // was corpus-flat (3.0→6.1 s) while the build grew 5.2→32.2 s
     "sim_topk_ivfpq_append",
     // round 18: the graph-append lifecycle at both decades (the r17
     // verdict's missing rows — "append cost ∝ delta" needs the same

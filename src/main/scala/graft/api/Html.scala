@@ -21,9 +21,10 @@ private[api] object Html {
       case '>' => "&gt;"
       case '&' => "&amp;"
       case '"' => "&quot;"
-      // ingest enforces ^\w+$ on service names, but migrated stores
-      // can carry arbitrary ones — a bare apostrophe would close the
-      // single-quoted JS string literals these pages interpolate into
+      // ingest keeps only ServiceStore.ServicePattern service names,
+      // but migrated stores can carry arbitrary ones — a bare
+      // apostrophe would close the single-quoted JS string literals
+      // these pages interpolate into
       case '\'' => "&#39;"
       case c => c.toString
     }

@@ -96,12 +96,10 @@ object Decontaminate {
     * operator, both norms computed at run time — and `greatest` /
     * SQL `MAX` agree on the IEEE total order, so the flagged set and
     * the reported maxima are oracle-exact. (Doc applies to
-    * [[semanticDecontaminate]] below; [[semanticKeep]] is the same
-    * gate inverted for the ingest path.)
+    * [[semanticDecontaminate]] below.)
     */
   /** Eval vectors collected to driver literals, bounds-checked — the
-    * broadcast-the-eval-side step shared by [[semanticDecontaminate]]
-    * and [[semanticKeep]].
+    * broadcast-the-eval-side step of [[semanticDecontaminate]].
     */
   private def evalVectors(evalSet: DataFrame): Array[Array[Double]] = {
     import graft.functions.VectorFunctions.asDouble
@@ -136,33 +134,5 @@ object Decontaminate {
       .withColumn("max_eval_sim", bestEvalSim(ev, col("v"), col("nv")))
       .filter(col("max_eval_sim") >= lit(tau))
       .select(col("vec_id"), col("max_eval_sim"))
-  }
-
-  /** The [[semanticDecontaminate]] gate inverted into a KEEP filter —
-    * the curate-at-ingest form: returns `corpus` rows whose max
-    * eval-cosine stays BELOW `tau`, all original columns intact, as
-    * ONE zero-shuffle projection+filter over the input (no join back,
-    * nothing flagged-side materialized). Rows with a NULL embedding
-    * pass through: the gate only judges what it can see — dropping
-    * unembedded rows would make ingest availability depend on an
-    * upstream embedder, which is a different policy than
-    * decontamination.
-    */
-  def semanticKeep(corpus: DataFrame, evalSet: DataFrame, tau: Double,
-                   embCol: String = "embedding"): DataFrame = {
-    import graft.functions.VectorFunctions.{asDouble, norm}
-    val ev = evalVectors(evalSet)
-    corpus
-      .withColumn("__v", asDouble(col(embCol)))
-      .withColumn("__nv", norm(col("__v")))
-      .withColumn("__sim", bestEvalSim(ev, col("__v"), col("__nv")))
-      // the literal complement of semanticDecontaminate's flag
-      // predicate (__sim >= tau) rather than a rewritten `< tau`:
-      // under engine NaN-ordering rules a NaN similarity (zero-norm
-      // embedding) can satisfy neither or both of `>= tau` / `< tau`
-      // depending on the engine — negating the flag predicate itself
-      // guarantees every row is exactly flagged or kept, never neither
-      .filter(!(col("__sim") >= lit(tau)) || col("__sim").isNull)
-      .drop("__v", "__nv", "__sim")
   }
 }

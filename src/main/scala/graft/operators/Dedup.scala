@@ -155,9 +155,12 @@ object Dedup {
     *     die here, so the result is exact for ANY fpp.
     *
     * The filter itself is reusable across batches: the prebuilt-filter
-    * overload below lets a caller own the filter's lifecycle
-    * (see `streaming.CorpusBloom`); this entry point rebuilds
-    * per call to stay a pure function. `expectedItems <= 0` (the
+    * overload below lets a caller own the filter's lifecycle (build it
+    * once, keep it a superset of the corpus as batches land, rebuild
+    * it only when the corpus outgrows its capacity, since a filter
+    * sized below its item count saturates and passes nearly every
+    * key); this entry point rebuilds per call to stay a pure
+    * function. `expectedItems <= 0` (the
     * default) sizes the filter from an actual corpus count so it can
     * never silently saturate — pass an explicit tracked count to skip
     * that extra corpus pass.
@@ -653,10 +656,9 @@ object Dedup {
     * corpus docs are re-shingled, via the member semi-join).
     *
     * Returns `(doc_a ∈ corpus, doc_b ∈ new, jaccard)`. Doc ids must be
-    * disjoint across the two inputs (same contract as
-    * `streaming.NearDupStream`, which is this operator's per-batch
-    * streaming form with the corpus bands PERSISTED instead of
-    * recomputed — at 100 TB, store the bands once and reuse them).
+    * disjoint across the two inputs. Every call recomputes the
+    * corpus's band keys; at 100 TB a per-batch caller should persist
+    * the corpus bands once and reuse them.
     */
   def minhashLshAgainst(newDocs: DataFrame, corpus: DataFrame,
                         n: Int = 3, minJaccard: Double = 0.2,

@@ -517,9 +517,11 @@ object Similarity {
     *
     * NOT oracle-gated: the warm graph is a different (equally valid)
     * approximate index than the cold build — its gate is the recall
-    * floor (WarmSweep: ≥0.9 avg / ≥0.7 min recall@10, the GraphSweep
-    * bar) plus the serve-twin spec; the WALK over any published
-    * layout stays deterministic and spec-pinned.
+    * floor (≥0.9 avg / ≥0.7 min recall@10, the declared graph serving
+    * bar; the warm-rebuild sweep at sf0.1 measured 1 warm round at
+    * 0.92/0.70 for 0.46× the cold build's wall, COVERAGE.md "Warm-start
+    * graph rebuilds") plus the serve-twin spec; the WALK over any
+    * published layout stays deterministic and spec-pinned.
     *
     * `prevAdj` = the prior layout's `adj` relation (src, dst);
     * `prevNodes` = its `nodes` (vec_id) — both straight reads of a
@@ -769,9 +771,12 @@ object Similarity {
     * rows are the eigenvectors in allocation order. One corpus scan,
     * one driver-local O(d³) solve.
     *
-    * Returns the d rotation rows. Sweep-tier (PqSweep's "opq" arm):
-    * the Gramian's float sum is partitioning-order-dependent, so the
-    * rotation is run-deterministic only — adoption into an
+    * Returns the d rotation rows. Sweep-tier, declared by no query:
+    * the r16 PQ sweep measured recall@10 0.41–0.45 against raw
+    * 0.46–0.53 at equal budget and rejected it (COVERAGE.md, "OPQ
+    * rotation"). The Gramian's float sum is
+    * partitioning-order-dependent, so the rotation is run-deterministic
+    * only — adoption into an
     * oracle-gated query would need the exact-decimal gram pass.
     */
   def opqParametricRotation(corpus: DataFrame, m: Int): Seq[Array[Double]] = {
@@ -957,8 +962,9 @@ object Similarity {
     * (`coldRounds`) when no version is published yet. The published
     * layout is format-identical to a cold one ([[writeGraphLayout]]),
     * so rotation, retention, pinning, and the serve walk are
-    * untouched; the warm graph's quality gate is WarmSweep's measured
-    * recall floor, not the cold build's oracle.
+    * untouched; the warm graph's quality gate is the measured recall
+    * floor (COVERAGE.md, "Warm-start graph rebuilds"), not the cold
+    * build's oracle.
     */
   def graphPublishVersionWarm(corpus: DataFrame, centroids: DataFrame,
                               k: Int, root: String,
@@ -2450,8 +2456,10 @@ object Similarity {
     * quantize-the-residual recipe: codes approximate x − c(x), and the
     * asymmetric score adds the exact q·c(x) back
     * ([[probesWithCd]]). Same plan shape as the raw path (map-side
-    * coding, query-side-bounded probe join, windowed top-k); the
-    * recall difference at equal m/probe is the PqSweep finding.
+    * coding, query-side-bounded probe join, windowed top-k). At equal
+    * m/probe the r15 PQ sweep measured recall@10 0.37 against the raw
+    * path's 0.49–0.53 on this corpus (COVERAGE.md, "Residual-encoding
+    * IVFPQ").
     */
   def ivfPqResidualTopKWith(corpus: DataFrame, queries: DataFrame,
                             cellCentroids: DataFrame, books: Books,

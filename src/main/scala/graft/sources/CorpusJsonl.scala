@@ -48,8 +48,9 @@ object CorpusJsonl {
     parse(spark.read.text(path))
 
   /** Streaming read of a landing directory (new files per trigger) —
-    * the same schema/quarantine contract, for curate-at-ingest chains
-    * ([[graft.streaming.CurationStream]]) fed by dump deliveries.
+    * the same schema/quarantine contract, for a curate-at-ingest chain
+    * fed by dump deliveries (a `foreachBatch` that runs the batch
+    * quality and [[graft.operators.Dedup]] operators per micro-batch).
     */
   def readStream(spark: SparkSession, path: String): DataFrame =
     parse(spark.readStream.text(path))

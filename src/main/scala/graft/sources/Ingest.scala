@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.store.ServiceStore
+
 /** The ingest pipeline O1-O3 as pure DataFrame transforms: syslog frame
   * → JSON wire record → validated, enriched Entry rows (reference:
   * ballcone/syslog_protocol.py:32-90).
@@ -23,8 +25,17 @@ object Ingest {
       .withColumn("__payload", nullif(regexp_extract(col(column), SyslogRegex, 1), lit("")))
       .filter(col("__payload").isNotNull)
 
+  /** What the reference's `str.strip()` removes from a service name
+    * (Python's `str.isspace` set); Spark's one-argument `trim` removes
+    * spaces only.
+    */
+  private val Whitespace = " \t\n\u000B\f\r\u001C\u001D\u001E\u001F" +
+    "\u0085\u00A0\u1680\u2000\u2001\u2002\u2003\u2004\u2005\u2006" +
+    "\u2007\u2008\u2009\u200A\u2028\u2029\u202F\u205F\u3000"
+
   /** O1/O2: payload → wire columns; malformed JSON or missing/invalid
-    * service drops (service normalized lower+trim, `^\w+$` —
+    * service drops (service stripped of whitespace at both ends,
+    * lowered, then checked against [[ServiceStore.ServicePattern]] —
     * core.py:15,53-58).
     *
     * Performance note: the payload is parsed with `json_tuple` — a
@@ -48,13 +59,14 @@ object Ingest {
       .toDF("__svc", "__ip", "__host", "__rawpath", "__status",
         "__referrer", "__ua", "__rawlength", "__rawgt", "__rawdate")
       .select(
-        lower(trim(col("__svc"))).as("service"),
+        lower(trim(col("__svc"), Whitespace)).as("service"),
         col("__ip"), col("__host"), col("__rawpath"), col("__status"),
         col("__referrer"), col("__ua"),
         expr("try_cast(__rawlength AS BIGINT)").as("__length"),
         expr("try_cast(__rawgt AS DOUBLE)").as("__gt"),
         col("__rawdate"))
-      .filter(col("service").isNotNull && col("service").rlike("^\\w+$"))
+      .filter(col("service").isNotNull &&
+        col("service").rlike(ServiceStore.ServicePattern))
 
   /** O3: enrichment projection → (service, Entry columns...).
     *

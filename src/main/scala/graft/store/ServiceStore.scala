@@ -29,8 +29,6 @@ import org.apache.spark.sql.types.{StringType, StructType}
 final class ServiceStore(spark: SparkSession, warehouse: String) {
   import ServiceStore._
 
-  val ServicePattern = "^\\w+$"
-
   private def fs = new Path(warehouse)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -461,6 +459,14 @@ final class ServiceStore(spark: SparkSession, warehouse: String) {
 }
 
 object ServiceStore {
+
+  /** A valid service name: one or more word characters and nothing
+    * else (the reference's `\A[\w]+\Z`, core.py:15). Ingest applies
+    * it with `rlike`, which finds rather than matches, so both ends are
+    * anchored, and at `\z` because `$` also matches before a final
+    * newline.
+    */
+  val ServicePattern = "^\\w+\\z"
 
   /** A service's small files are rewritten once it holds this many.
     * A report request pays about 10 ms of CPU per file it opens (a

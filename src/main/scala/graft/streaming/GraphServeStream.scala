@@ -24,9 +24,12 @@ import graft.operators.Similarity
   * [[IvfStream]] detects the drift, a batch job publishes a fresh
   * version ([[graft.operators.Similarity.graphPublishVersion]]), and
   * serving rotates to it atomically at the next micro-batch. Restart
-  * semantics are at-least-once (the foreachBatch caveat
-  * [[CurationStream]] documents): a replayed batch re-appends its
-  * answers — identical rows, keyed (q_id, rn) downstream.
+  * semantics are at-least-once, the standard `foreachBatch` caveat:
+  * the engine commits a batch's offsets only after its sink returns,
+  * so a crash after the append but before the commit replays the
+  * batch, and a crash inside the append can leave part of it. A
+  * replayed batch re-appends its answers — identical rows, keyed
+  * (q_id, rn) downstream.
   */
 object GraphServeStream {
 

@@ -23,9 +23,12 @@ import graft.operators.Similarity
   * re-assigned or re-scanned. Unlike the graph walk there is no
   * driver-side anchor bound on the query batch (the only collect is
   * the probed-cell id set, bounded by the ≤1024-cell cap), so batches
-  * need no chunking. Restart semantics are at-least-once (the
-  * foreachBatch caveat [[CurationStream]] documents): a replayed
-  * batch re-appends identical rows, keyed (q_id, rn) downstream —
+  * need no chunking. Restart semantics are at-least-once, the
+  * standard `foreachBatch` caveat: the engine commits a batch's
+  * offsets only after its sink returns, so a crash after the append
+  * but before the commit replays the batch, and a crash inside the
+  * append can leave part of it. A replayed batch re-appends identical
+  * rows, keyed (q_id, rn) downstream —
   * identical guaranteed by [[GraphServeStream.pinnedVersion]] in the
   * versioned form.
   */

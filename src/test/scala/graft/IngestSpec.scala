@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.Row
 import graft.sources.{GeoIp, Ingest}
+import graft.store.ServiceStore
 
 /** Ingest pipeline O1-O3: frame/JSON parsing, drop rules, enrichment
   * (reference semantics: ballcone/syslog_protocol.py:32-90).
@@ -41,6 +42,19 @@ class IngestSpec extends SparkSpec {
       wire(service = "KeptOne"))
     assert(rows.count() === 1)
     assert(rows.head().getAs[String]("service") === "keptone") // lower+trim
+  }
+
+  test("service names strip whitespace at both ends; inner whitespace drops") {
+    // JSON escapes: the parsed names are "shop\n", " Shop\t", "sh\nop"
+    val rows = parse(wire(service = "shop\\n"), wire(service = " Shop\\t"),
+      wire(service = "sh\\nop"))
+    assert(rows.select("service").as[String].collect().toSeq ===
+      Seq("shop", "shop"))
+    val store = new ServiceStore(spark,
+      java.nio.file.Files.createTempDirectory("graft-wh-names").toString)
+    store.append(rows)
+    assert(store.list() === Seq("shop") && store.exists("shop"))
+    assert(!store.checkService("shop\n"))
   }
 
   test("ISO-8601 offset normalizes to UTC instant") {

@@ -15,8 +15,9 @@ import graft.streaming.IvfStream.Vec
   * .graphPublishVersionWarm]]) publishes a layout format-identical to
   * a cold build's — serving rotates to it atomically and answers it
   * bit-identically to a direct batch probe of the same layout, so the
-  * warm path changes ONLY the build cost (WarmSweep prices that), not
-  * one serving invariant.
+  * warm path changes ONLY the build cost (measured at sf0.1: 1 warm
+  * round 7.2 s vs a 3-round cold build 15.7 s, COVERAGE.md "Warm-start
+  * graph rebuilds"), not one serving invariant.
   */
 class WarmRebuildSpec extends SparkSpec {
   import spark.implicits._
